@@ -3,8 +3,10 @@ PY := PYTHONPATH=.
 
 .PHONY: test parity dtypes plans bench validate pipeline-demo submit-check
 
+# the tier-1 command: whole suite, no early exit, one Spark core per CPU
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 parity:
 	$(PY) python tools/parity_check.py /root/testdata/sf0.01

@@ -3,11 +3,11 @@
 Everything the reference does per line in its eager loop
 (`/root/reference/parser_core.go:176-254`: skip-check -> decode ->
 unmatched? -> filter -> selectLabels -> addLineNumber -> LineHandler ->
-prefix -> write) runs here as ONE Arrow-batched ``mapInPandas`` pass
-followed by pure-Catalyst finalization. Design goals at 100 TB:
+prefix -> write) runs here as ONE Arrow-batched Python pass followed by
+pure-Catalyst finalization. Design goals at 100 TB:
 
-- exactly one Python<->JVM hop on the hot path (regex decode + DSL filter +
-  serialization all happen in the same pandas batch function);
+- exactly one Python<->JVM hop on the hot path; the regex decode is the
+  one RE2 cascade of :func:`.decoders.regex_decode` on every surface;
 - regexes and filter predicates compile once per executor, not per line
   (the reference recompiles filters per line — parser_core.go:220);
 - TSV "isFirst" header and prefix decoration are JVM-side Catalyst
@@ -30,6 +30,8 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -102,8 +104,7 @@ def parse_routed(
     pattern_strs = _resolve_patterns(fmt)
     if pattern_strs is not None:
         # Driver-side validation, AddPattern semantics (parser_regex.go:74-89).
-        for p in pattern_strs:
-            pat.validate_pattern(p)
+        names = [pat.validate_pattern(p) for p in pattern_strs]
         if not pattern_strs:
             raise decoders.NoPatternError
     # Driver-side DSL validation: syntax + operator errors surface before any
@@ -128,12 +129,6 @@ def parse_routed(
         raise ValueError(f"keep_raw must be unmatched/all/none, got {keep_raw!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = (
-            [pat.validate_pattern(p) for p in pattern_strs]
-            if pattern_strs is not None
-            else None
-        )
-        names = [pat.group_names(p) for p in compiled] if compiled else None
         filt = compile_filters(filter_exprs)
         for pdf in batches:
             raws = pdf["raw"].tolist()
@@ -150,17 +145,19 @@ def parse_routed(
                 else:
                     live_idx.append(i)
 
-            if compiled is not None:
-                sub_pids, sub_vals = decoders.regex_decode_batch(
-                    [raws[i] for i in live_idx], compiled, names
-                )
+            if pattern_strs is not None:
+                decoded = decoders.regex_decode(
+                    pa.array([raws[i] for i in live_idx], pa.string()),
+                    pattern_strs,
+                ).to_pydict()
+                sub_pids = decoded["pattern_id"]
                 row_ls: list[list[str] | None] = [None] * n
                 row_vs: list[list[str] | None] = [None] * n
                 for k, i in enumerate(live_idx):
-                    pids[i] = sub_pids[k]
-                    if sub_pids[k] >= 0:
-                        row_ls[i] = names[sub_pids[k]]
-                        row_vs[i] = sub_vals[k]
+                    pids[i] = pid = sub_pids[k]
+                    if pid >= 0:
+                        row_ls[i] = names[pid]
+                        row_vs[i] = [decoded[nm][k] for nm in names[pid]]
             else:
                 sub_ls, sub_vs = decoders.ltsv_decode_batch(
                     [raws[i] for i in live_idx]
@@ -283,20 +280,21 @@ def extract_fields(
     column-oriented equivalent of the reference's (labels, values) slices
     (parser_core.go:69) and feeds joins/aggregations without further Python.
 
+    The decode is one ``mapInArrow`` stage: Arrow batches in, RE2 kernels
+    (:func:`.decoders.regex_decode`), Arrow batches out, no Python
+    strings.
+
     ``fields`` pushes column pruning through the UDF boundary: Catalyst
-    cannot prune inside a black-box ``mapInPandas``, so a downstream
+    cannot prune inside a black-box ``mapInArrow``, so a downstream
     ``.select`` of 5 of 33 CloudFront fields would otherwise still pay
-    Python materialization + Arrow transfer for all 33. Selection keeps
-    union (line) order and silently drops unknown names — the reference's
+    extraction + Arrow transfer for all 33. Selection keeps union (line)
+    order and silently drops unknown names — the reference's
     ``selectLabels`` semantics (parser_core.go:291-305).
     """
     pattern_strs = _resolve_patterns(fmt)
     if not pattern_strs:
         raise decoders.NoPatternError
-    for p in pattern_strs:
-        pat.validate_pattern(p)
-    compiled0 = [pat.validate_pattern(p) for p in pattern_strs]
-    union = pat.union_schema(compiled0)
+    union = pat.union_schema([pat.validate_pattern(p) for p in pattern_strs])
     if fields is not None:
         wanted = set(fields)
         union = [n for n in union if n in wanted]
@@ -309,52 +307,29 @@ def extract_fields(
         + [StructField(name, StringType()) for name in union]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = [pat.validate_pattern(p) for p in pattern_strs]
-        names = [pat.group_names(p) for p in compiled]
-        # per-pattern: union position -> capture position (or None)
-        slot: list[list[int | None]] = []
-        for ns in names:
-            pos = {nm: k for k, nm in enumerate(ns)}
-            slot.append([pos.get(nm) for nm in union])
-        width = len(union)
-        for pdf in batches:
-            raws = pdf[line_col].tolist()
-            pids, vals = decoders.regex_decode_batch(raws, compiled, names)
-            cols: list[list[str | None]] = [[None] * len(raws) for _ in range(width)]
-            for i, pid in enumerate(pids):
-                if pid < 0:
-                    continue
-                vs = vals[i]
-                sl = slot[pid]
-                for j in range(width):
-                    k = sl[j]
-                    if k is not None:
-                        cols[j][i] = vs[k]
-            data = {c: pdf[c] for c in passthrough}
-            data["pattern_id"] = pd.Series(pids, dtype="int32")
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            lines = batch.column(line_col)
+            decoded = decoders.regex_decode(lines, pattern_strs, union)
+            pids = decoded.column("pattern_id")
+            cols = [batch.column(c) for c in passthrough] + [pids]
             if raw_when_unmatched:
-                data["raw"] = pd.Series(
-                    [raws[i] if pids[i] < 0 else None for i in range(len(raws))],
-                    dtype="object",
-                )
-            for j, name in enumerate(union):
-                data[name] = pd.Series(cols[j], dtype="object")
-            yield pd.DataFrame(data)
+                cols.append(pc.if_else(pc.less(pids, 0), lines, None))
+            cols += decoded.columns[1:]
+            yield pa.RecordBatch.from_arrays(cols, names=out_schema.names)
 
-    return lines_df.select(*passthrough, line_col).mapInPandas(run, out_schema)
+    return lines_df.select(*passthrough, line_col).mapInArrow(run, out_schema)
 
 
 def fast_parse_routed(
     lines_df: DataFrame,
     fmt: str | Sequence[str],
     opt: Option | None = None,
-    decoder: str = "python",
 ) -> DataFrame:
     """JVM-serialization fast path: same routed output contract as
     :func:`parse_routed`, ~2x throughput on mostly-matching corpora.
 
-    Python does ONLY the regex decode (struct columns out); status
+    Python does ONLY the regex decode (:func:`extract_fields`); status
     derivation, DSL filtering, label projection, line numbers and the
     five output encodings are Catalyst expressions (whole-stage codegen)
     via :mod:`..functions.serialize_expr`.
@@ -380,24 +355,9 @@ def fast_parse_routed(
     if isinstance(fmt, str) and fmt == "ltsv":
         raise ValueError("fast path is regex-presets only; use parse_routed")
 
-    if decoder not in ("python", "jvm"):
-        raise ValueError(f"decoder must be python/jvm, got {decoder!r}")
-    if decoder == "jvm":
-        # zero-Python plan: regexp_replace group rewrite (see
-        # functions/jvm_decode.py for semantics caveats)
-        from .functions.jvm_decode import extract_fields_jvm
-
-        fields = extract_fields_jvm(
-            lines_df, fmt, passthrough=["source", "line_no"],
-            raw_when_unmatched=True,
-        )
-    else:
-        fields = extract_fields(
-            lines_df,
-            fmt,
-            passthrough=["source", "line_no"],
-            raw_when_unmatched=True,
-        )
+    fields = extract_fields(
+        lines_df, fmt, passthrough=["source", "line_no"], raw_when_unmatched=True
+    )
 
     skip = [int(s) for s in opt.skip_lines]
     status = F.when(F.col("line_no").isin(skip), F.lit(SKIPPED)) if skip else None
@@ -410,22 +370,23 @@ def fast_parse_routed(
     chain = (status.when(unmatched_c, F.lit(UNMATCHED)) if status is not None
              else F.when(unmatched_c, F.lit(UNMATCHED)))
     chain = chain.when(excluded_c, F.lit(EXCLUDED)).otherwise(F.lit(MATCHED))
-    fields = fields.withColumn("status", chain)
+    # "_status": a format may have its own "status" field (Apache CLF)
+    fields = fields.withColumn("_status", chain)
 
     out_expr, header_expr = serialize_expr(
         fmt, handler=handler, labels=list(opt.labels) or None,
         line_number=opt.line_number,
     )
-    out_line = F.when(F.col("status") == MATCHED, out_expr)
+    out_line = F.when(F.col("_status") == MATCHED, out_expr)
     if opt.unmatch_lines:
-        out_line = out_line.when(F.col("status") == UNMATCHED, F.col("raw"))
+        out_line = out_line.when(F.col("_status") == UNMATCHED, F.col("raw"))
     routed = fields.select(
         "source",
         "line_no",
-        "status",
+        F.col("_status").alias("status"),
         # skipped lines are never decoded in the reference
         # (parser_core.go:197-200): pattern_id stays -1
-        F.when(F.col("status") == SKIPPED, F.lit(-1))
+        F.when(F.col("_status") == SKIPPED, F.lit(-1))
         .otherwise(F.col("pattern_id"))
         .cast("int")
         .alias("pattern_id"),
@@ -433,7 +394,7 @@ def fast_parse_routed(
         (header_expr if handler == "tsv" else F.lit(None).cast("string")).alias(
             "tsv_header"
         ),
-        F.when(F.col("status") == UNMATCHED, F.col("raw")).alias("raw"),
+        F.when(F.col("_status") == UNMATCHED, F.col("raw")).alias("raw"),
     )
 
     return _finalize_routed(routed, handler == "tsv", opt)

@@ -121,7 +121,7 @@ def serialize_expr(
     pattern_strs = (
         list(pat.PRESETS[fmt]) if isinstance(fmt, str) else [str(p) for p in fmt]
     )
-    compiled = [pat.validate_pattern(p) for p in pattern_strs]
+    names = [pat.validate_pattern(p) for p in pattern_strs]
     builders = {
         "json": lambda f: _json_expr(f, line_number, pretty=False),
         "pretty_json": lambda f: _json_expr(f, line_number, pretty=True),
@@ -134,13 +134,13 @@ def serialize_expr(
     build = builders[handler]
 
     if handler == "json":
-        union = _fields_for(pat.union_schema(compiled), labels)
+        union = _fields_for(pat.union_schema(names), labels)
         return _json_native(union, line_number), F.lit(None).cast("string")
 
     out: Column | None = None
     header: Column | None = None
-    for pid, cp in enumerate(compiled):
-        fields = _fields_for(pat.group_names(cp), labels)
+    for pid, ns in enumerate(names):
+        fields = _fields_for(ns, labels)
         expr = build(fields)
         cond = F.col(pattern_col) == pid
         out = F.when(cond, expr) if out is None else out.when(cond, expr)

@@ -4,18 +4,21 @@ API:
 
     spark.sql("SELECT t.* FROM logs, LATERAL parse_clf(logs.line) t")
 
-Semantics match the engine exactly (first-match-wins cascade, pattern_id
-= -1 + NULL fields for unmatched — parser_core.go:259-270). The UDTF is
-the row-at-a-time cousin of the vectorized mapInPandas path: convenient
-for SQL exploration, NOT the 100 TB hot path (use extract_fields /
-parse_routed for bulk work).
+Semantics match the engine exactly: the UDTF calls the engine's decoder,
+:func:`..decoders.regex_decode`, on a one-line batch (first-match-wins
+cascade, pattern_id = -1 + NULL fields for unmatched —
+parser_core.go:259-270). It is the row-at-a-time cousin of the
+vectorized ``mapInArrow`` path: convenient for SQL exploration, NOT the
+100 TB hot path (use extract_fields / parse_routed for bulk work).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql.functions import udtf
 
 from .. import patterns as pat
+from ..decoders import regex_decode
 
 
 def make_parse_udtf(fmt: str, fields: list[str] | None = None):
@@ -23,8 +26,7 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
     columns (union order, silent drop — selectLabels semantics);
     default = full union schema plus pattern_id."""
     pattern_strs = list(pat.PRESETS[fmt])
-    compiled0 = [pat.validate_pattern(p) for p in pattern_strs]
-    union = pat.union_schema(compiled0)
+    union = pat.union_schema([pat.validate_pattern(p) for p in pattern_strs])
     if fields is not None:
         wanted = set(fields)
         union = [n for n in union if n in wanted]
@@ -33,24 +35,12 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
 
     @udtf(returnType=ret)
     class ParseUDTF:
-        def __init__(self) -> None:
-            self._compiled = [pat.validate_pattern(p) for p in pattern_strs]
-
         def eval(self, raw: str):
             if raw is None:
                 yield (-1,) + (None,) * len(out_names)
                 return
-            for pid, p in enumerate(self._compiled):
-                m = p.search(raw)
-                if m is not None:
-                    d = m.groupdict()
-                    # Go returns "" for non-participating groups
-                    yield (pid,) + tuple(
-                        (d[n] if d[n] is not None else "") if n in d else None
-                        for n in out_names
-                    )
-                    return
-            yield (-1,) + (None,) * len(out_names)
+            decoded = regex_decode(pa.array([raw]), pattern_strs, out_names)
+            yield tuple(col[0].as_py() for col in decoded.columns)
 
     return ParseUDTF
 

@@ -2,14 +2,13 @@
 
 The north_rule calls for "grok/regex parse"; the reference only ships raw
 regex presets, so this layer adds the grok ergonomics on top of the same
-engine: a grok expression expands to a Python named-group regex and feeds
+engine: a grok expression expands to a named-group RE2 regex and feeds
 the standard pattern registry/validation (`patterns.validate_pattern`),
-so every engine path (compat, fast, jvm) accepts grok-authored formats.
+so every engine path (compat, fast) accepts grok-authored formats.
 
 Supported macro grammar: ``%{MACRO}`` (match, no capture) and
 ``%{MACRO:name}`` (named capture). Macros are a curated subset of the
-community grok core patterns, restricted to the regex dialect shared by
-Python/Java/RE2.
+community grok core patterns, in the RE2 dialect.
 """
 
 from __future__ import annotations

@@ -165,16 +165,17 @@ def collect_result(
     routed: DataFrame,
     source: str = "",
     elapsed: float = 0.0,
-    max_errors: int | None = None,
+    max_errors: int | None = 1000,
 ) -> Result:
     """Aggregate counters + errors list into a Result (test/driver path).
 
     ``max_errors`` bounds the driver-side error collect: the reference
     accumulates every unmatched line in memory (parser_result.go:32-36),
     which is fine for its single-file corpora but unbounded at 10^12
-    docs — pass a cap (the report only prints top-10 anyway) and read
-    the full set from the unmatched sink instead. Default None keeps
-    reference parity."""
+    docs — the default keeps the first 1000 (the report only prints
+    top-10 anyway); read the full set from the unmatched sink. ``None``
+    collects every error, as the reference does; the Parser API verbs
+    pass it for reference parity."""
     row = routed.agg(*_counter_aggs()).collect()[0]
     err_df = (
         routed.filter(F.col("status") == UNMATCHED)

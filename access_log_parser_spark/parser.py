@@ -116,7 +116,7 @@ class BaseParser:
                 .orderBy("source", "line_no")
                 .collect()
             ]
-            result = collect_result(routed, source=source)
+            result = collect_result(routed, source=source, max_errors=None)
         finally:
             # The job group is thread-local driver state: without clearing
             # it, unrelated actions the caller runs later on this thread
@@ -182,7 +182,7 @@ class BaseParser:
             .collect()
         )
         out = [r["out_line"] for r in ordered]
-        agg = collect_result(routed, source=basename(zip_path))
+        agg = collect_result(routed, source=basename(zip_path), max_errors=None)
         agg.elapsed_time = time.monotonic() - start
         agg.errors = [
             ParseError(entry=r["source"], line_number=r["line_no"], line=r["raw"])

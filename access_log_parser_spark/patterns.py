@@ -1,20 +1,24 @@
-"""Preset pattern registry and validation.
+r"""Preset pattern registry and validation.
 
 The preset regexes are the public log-format grammars from the reference
 (`/root/reference/parser_regex.go:104-237`): Apache CLF (4 patterns),
 Apache CLF + vhost (4), Amazon S3 access logs (5, trailing-truncation
 fallbacks), CloudFront (1, tab-separated), ALB (1), NLB (1), CLB (2).
-They use only the RE2 subset shared with Python ``re`` (named groups
-``(?P<x>...)``, char classes, no backrefs), so they compile unchanged.
+They are RE2 syntax and run on RE2 (Arrow's regex kernels), the engine
+family of the reference's Go ``regexp``: first match wins, and ``\d``,
+``\s``, ``\w`` are ASCII-only.
 
 Validation mirrors ``AddPattern`` (`/root/reference/parser_regex.go:74-89`):
-the pattern must compile, contain at least one capture group, and every
-group must be named.
+the pattern must compile under RE2, contain at least one capture group,
+and every group must be named.
 """
 
 from __future__ import annotations
 
 import re
+
+import pyarrow as pa
+import pyarrow.compute as pc
 
 REGEX_PATTERN_ERROR = "invalid regex pattern"
 
@@ -136,94 +140,65 @@ class PatternError(ValueError):
     pass
 
 
-# Constructs Go's RE2 cannot compile but Python's `re` accepts: the
-# reference (regexp.Compile, parser_regex.go:75) would reject a pattern
-# using these, so accepting them here would let user patterns silently
-# mean something the reference cannot express. Scanned outside character
-# classes.
-_RE2_UNSUPPORTED = (
-    ("(?=", "lookahead"),
-    ("(?!", "negative lookahead"),
-    ("(?<=", "lookbehind"),
-    ("(?<!", "negative lookbehind"),
-    ("(?P=", "backreference"),
-)
+_EMPTY = pa.array([], pa.string())
 
 
-def _re2_incompatibility(src: str) -> str | None:
-    """Name of the first RE2-unsupported construct in ``src``, or None."""
-    in_class = [False] * len(src)
-    for m in _CLASS_RE.finditer(src):
-        for i in range(m.start(), m.end()):
-            in_class[i] = True
-    i = 0
-    while i < len(src):
-        if in_class[i]:
-            i += 1
-            continue
-        ch = src[i]
-        if ch == "\\":
-            nxt = src[i + 1] if i + 1 < len(src) else ""
-            if nxt.isdigit() and nxt != "0":
-                return "backreference"
-            i += 2
-            continue
-        for tok, name in _RE2_UNSUPPORTED:
-            if src.startswith(tok, i):
-                return name
-        i += 1
-    return None
+def validate_pattern(pattern: str) -> list[str]:
+    r"""Validate one pattern the way ``AddPattern`` does
+    (parser_regex.go:74-89) and return its group names in positional
+    order (``SubexpNames()[1:]``).
 
-
-def validate_pattern(pattern: str) -> re.Pattern:
-    """Compile + validate one pattern (parser_regex.go:74-89 semantics).
-
-    Rejects: non-compiling patterns, patterns with no capture group,
-    patterns with any unnamed capture group, and patterns using regex
-    constructs Go's RE2 cannot compile (lookaround, backreferences) —
-    the reference's ``regexp.Compile`` errors on those, so parity
-    requires rejecting them even though Python's ``re`` would accept.
+    The pattern is compiled by RE2, the engine family of the reference's
+    Go ``regexp``: ``extract_regex`` on an empty array raises on anything
+    RE2 rejects (lookaround, backreferences, ``\Z``, atomic groups,
+    possessive quantifiers) and on unnamed groups. Patterns with no
+    capture group, and patterns that reuse a group name, are rejected
+    here: the union schema keys columns by name, so a repeated name has
+    no column of its own.
     """
-    incompat = _re2_incompatibility(pattern)
-    if incompat is not None:
-        raise PatternError(
-            f"{REGEX_PATTERN_ERROR}: {incompat} is not supported by the "
-            "reference's RE2 dialect"
-        )
     try:
-        ptn = re.compile(pattern)
-    except re.error as e:
-        raise PatternError(f"{REGEX_PATTERN_ERROR}: {e}") from e
-    if ptn.groups < 1:
+        struct = pc.extract_regex(_EMPTY, pattern=pattern).type
+    except pa.ArrowInvalid as e:
+        msg = str(e)
+        if "unnamed groups" in msg:
+            raise PatternError(
+                f"{REGEX_PATTERN_ERROR}: non-named capture group detected"
+            ) from e
+        msg = msg.removeprefix("Invalid regular expression: ")
+        raise PatternError(f"{REGEX_PATTERN_ERROR}: {msg}") from e
+    names = [f.name for f in struct]
+    if not names:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: capture group not found")
-    if len(ptn.groupindex) != ptn.groups:
-        raise PatternError(f"{REGEX_PATTERN_ERROR}: non-named capture group detected")
-    return ptn
+    dup = next((n for i, n in enumerate(names) if n in names[:i]), None)
+    if dup is not None:
+        raise PatternError(
+            f"{REGEX_PATTERN_ERROR}: duplicate capture group name {dup!r}"
+        )
+    return names
 
 
-def compile_patterns(patterns: list[str]) -> list[re.Pattern]:
-    return [validate_pattern(p) for p in patterns]
-
-
-_CLASS_RE = re.compile(r"\[\^?(?:\\.|[^\]\\])*\]")
+# One character class, POSIX classes ``[:alpha:]`` and a leading literal
+# ``]`` included.
+_CLASS_RE = re.compile(r"\[\^?\]?(?:\[:\^?[a-z]+:\]|\\.|[^\]\\])*\]")
 
 
 def _tabs_all_mandatory(src: str, in_class: list[bool]) -> bool:
     """True iff every literal tab outside a character class is MANDATORY:
     traversed at least once in every successful match. The tab-count
     guard's soundness argument needs this — a tab inside an optional /
-    min-0-quantified group, inside any scope with an alternation ``|``, or
-    inside a lookaround may be skipped by a successful match, leaving a
-    line tab for a greedy class to span even when ``line.count('\\t') ==
-    n_tabs`` (the unsound case: twin rejects a line the original accepts).
+    min-0-quantified group or inside any scope with an alternation ``|``
+    may be skipped by a successful match, leaving a line tab for a greedy
+    class to span even when the line's tab count equals ``n_tabs`` (the
+    unsound case: twin rejects a line the original accepts). Lookaround
+    needs no case: RE2 rejects it before a twin is derived.
 
     Single pass with a scope stack: a frame accumulates the tabs seen in
     its span; at ``)`` the frame's tabs are discarded as unsafe if the
-    frame had a direct ``|``, is a lookaround, or its quantifier allows
-    zero traversals — otherwise they propagate to the parent (an outer
-    scope may still invalidate them).
+    frame had a direct ``|`` or its quantifier allows zero traversals —
+    otherwise they propagate to the parent (an outer scope may still
+    invalidate them).
     """
-    frames: list[dict] = [{"tabs": 0, "pipe": False, "look": False}]
+    frames: list[dict] = [{"tabs": 0, "pipe": False}]
     i, n = 0, len(src)
     unsafe = False
     while i < n:
@@ -235,23 +210,15 @@ def _tabs_all_mandatory(src: str, in_class: list[bool]) -> bool:
             i += 2
             continue
         if ch == "(":
-            look = src.startswith(("(?=", "(?!", "(?<=", "(?<!"), i)
-            frames.append({"tabs": 0, "pipe": False, "look": look})
+            frames.append({"tabs": 0, "pipe": False})
             i += 1
             continue
         if ch == ")":
             if len(frames) == 1:  # unbalanced; be conservative
                 return False
             fr = frames.pop()
-            j = i + 1
-            min0 = False
-            if j < n and src[j] in "?*":
-                min0 = True
-            elif j < n and src[j] == "{":
-                m = re.match(r"\{(\d*)(?:,\d*)?\}", src[j:])
-                min0 = bool(m) and (m.group(1) == "" or int(m.group(1)) == 0)
             if fr["tabs"]:
-                if fr["pipe"] or fr["look"] or min0:
+                if fr["pipe"] or _min0(src, i + 1):
                     unsafe = True
                 else:
                     frames[-1]["tabs"] += fr["tabs"]
@@ -262,14 +229,9 @@ def _tabs_all_mandatory(src: str, in_class: list[bool]) -> bool:
         elif ch == "\t":
             # A min-0 quantifier directly on the bare tab ("\t?", "\t*",
             # "\t{0,2}") makes it skippable — same unsoundness as a min-0
-            # group, so mirror the group-close check here.
-            j = i + 1
-            if j < n and src[j] in "?*":
+            # group.
+            if _min0(src, i + 1):
                 unsafe = True
-            elif j < n and src[j] == "{":
-                m = re.match(r"\{(\d*)(?:,\d*)?\}", src[j:])
-                if m and (m.group(1) == "" or int(m.group(1)) == 0):
-                    unsafe = True
             frames[-1]["tabs"] += 1
         i += 1
     if frames[-1]["pipe"] and frames[-1]["tabs"]:
@@ -277,29 +239,38 @@ def _tabs_all_mandatory(src: str, in_class: list[bool]) -> bool:
     return not unsafe
 
 
-def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
-    """Derive a backtracking-free twin for a tab-separated pattern.
+def _min0(src: str, j: int) -> bool:
+    """Whether the quantifier starting at ``src[j]`` allows zero repeats."""
+    if j < len(src) and src[j] in "?*":
+        return True
+    m = re.match(r"\{(\d*)(?:,\d*)?\}", src[j:])
+    return bool(m) and (m.group(1) == "" or int(m.group(1)) == 0)
 
-    Greedy negated classes like ``[^\"]*`` may span tab separators and
-    force the Python engine to backtrack across the remaining fields
-    (~150us/line on the 33-field CloudFront preset). If a line contains
-    exactly as many tabs as the pattern has literal ``\\t`` separators,
-    every tab must be consumed by a separator literal in any successful
-    match, so no class can span a tab — narrowing every class to exclude
-    tab then accepts exactly the same lines with identical group values
-    (~2us/line, 67x). Returns ``(twin, n_separator_tabs)``; the caller
-    must apply the twin only to lines where ``line.count('\\t') ==
-    n_separator_tabs`` and fall back to the original otherwise.
+
+def fast_twin(pattern: str) -> tuple[str, int] | None:
+    """Derive an unambiguous twin for a tab-separated pattern.
+
+    Greedy negated classes like ``[^\"]*`` may span tab separators, which
+    makes the pattern ambiguous: RE2 then cannot extract submatches with
+    its one-pass matcher and falls back to a slower one (~5x on the
+    33-field CloudFront preset). If a line contains exactly as many tabs
+    as the pattern has literal tab separators, every tab must be consumed
+    by a separator literal in any successful match, so no class can span
+    a tab — narrowing every negated class to exclude tab then accepts
+    exactly the same lines with identical group values, and leftmost-first
+    priority picks the same match. Returns ``(twin, n_separator_tabs)``;
+    the caller must apply the twin only to lines whose tab count equals
+    ``n_separator_tabs`` and use the original otherwise.
 
     Returns None when the pattern has no tab separators, already excludes
     tabs everywhere, has a tab inside a character class, or has any
-    NON-MANDATORY literal tab — one inside an optional/min-0 group, an
-    alternation scope, or a lookaround (see :func:`_tabs_all_mandatory`:
-    a skippable pattern tab breaks the "every line tab is consumed by a
-    separator literal" step of the exchangeability argument, so the twin
-    could reject lines the original accepts).
+    NON-MANDATORY literal tab — one inside an optional/min-0 group or an
+    alternation scope (see :func:`_tabs_all_mandatory`: a skippable
+    pattern tab breaks the "every line tab is consumed by a separator
+    literal" step of the argument, so the twin could reject lines the
+    original accepts).
     """
-    src = pattern.pattern
+    src = pattern
     classes = list(_CLASS_RE.finditer(src))
     if any("\t" in m.group(0) or "\\t" in m.group(0) for m in classes):
         return None
@@ -326,23 +297,18 @@ def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
     out.append(src[pos:])
     if not changed:
         return None
-    return re.compile("".join(out)), n_tabs
+    return "".join(out), n_tabs
 
 
-def group_names(pattern: re.Pattern) -> list[str]:
-    """Capture group names in positional order (SubexpNames()[1:] analogue)."""
-    inv = {v: k for k, v in pattern.groupindex.items()}
-    return [inv[i] for i in range(1, pattern.groups + 1)]
-
-
-def union_schema(patterns: list[re.Pattern]) -> list[str]:
-    """Union of all group names, preserving first-seen positional order.
+def union_schema(names: list[list[str]]) -> list[str]:
+    """Union of the patterns' group names (as returned by
+    :func:`validate_pattern`), preserving first-seen positional order.
 
     The widest preset pattern comes first in every preset, so for presets
     this equals pattern 0's field list.
     """
     seen: dict[str, None] = {}
-    for p in patterns:
-        for name in group_names(p):
+    for ns in names:
+        for name in ns:
             seen.setdefault(name)
     return list(seen)

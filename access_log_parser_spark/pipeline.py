@@ -67,14 +67,7 @@ def run_pipeline(
 
     ``engine``: "fast" (JVM serialization, regex presets only), "compat"
     (reference-exact Python path), or "auto" (fast when eligible).
-    The fast path keeps the PYTHON decoder deliberately: the zero-Python
-    JVM decoder (decoder="jvm", byte-verified row-identical on the
-    presets) measured 2.5x SLOWER on the S3 cascade at 6M lines —
-    75-78 s vs 29-33 s at local[8] — because each fallback pattern costs
-    a full regexp_replace pass per row in Java's backtracking engine,
-    while the Arrow-batched Python loop runs one compiled first-match
-    cascade; codegen-resident is not automatically faster than a
-    vectorized Python stage when the regex work dominates.
+    Both decode with the same RE2 cascade (``decoders.regex_decode``).
 
     ``partition_lineage=True`` additionally records per-PARTITION counters
     in each batch manifest (north_rule: per-partition lineage): the routed

@@ -2,8 +2,8 @@
 each of example_test.go's five Example functions transliterated, with the
 ``// Output:`` blocks as byte-exact expectations. Inputs come from the
 same golden constants (tests/golden_s3.py, tests/golden_ltsv.py) and,
-for the file/gzip/zip variants, the reference's own testdata files
-(read-only at /root/reference/testdata).
+for the file/gzip/zip variants, the reference's testdata files as
+reconstructed from those constants under tests/fixtures/ (build.py).
 
 Ordering note: Go emits zip entries in archive order; the distributed
 engine orders by (entry, line_no), so ExampleParser_ParseZipEntries is
@@ -12,13 +12,15 @@ compared per entry group (same bytes, entry-sorted).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import golden_ltsv as gl
 import golden_s3 as g
 from access_log_parser_spark import Option
 from access_log_parser_spark.parser import LTSVParser, RegexParser, new_s3_parser
 from access_log_parser_spark.patterns import S3
 
-REF = "/root/reference/testdata"
+REF = str(Path(__file__).resolve().parent / "fixtures")
 
 # example_test.go:12-45 uses its own pattern list: the S3 preset with
 # method `[A-Z]+` (no '-') and protocol `HTTP/[0-9.]+` (no '|-')

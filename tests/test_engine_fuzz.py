@@ -1,6 +1,6 @@
 """Seeded randomized equivalence sweep: random Option combinations over a
 mixed matched/unmatched corpus must produce identical routed rows on the
-compat, fast(python) and fast(jvm) engines."""
+compat and fast engines."""
 
 import random
 
@@ -60,16 +60,12 @@ def test_randomized_equivalence(spark):
         # on every matched line)
         base = rows(parse_routed(lines, "s3", opt))
         assert rows(fast_parse_routed(lines, "s3", opt)) == base, (trial, opt)
-        assert rows(fast_parse_routed(lines, "s3", opt, decoder="jvm")) == base, (
-            trial,
-            opt,
-        )
 
 
 def test_randomized_equivalence_cloudfront(spark):
-    """Same 3-engine sweep over a CloudFront corpus — exercises the
-    tab-separated fast-twin decode (patterns.fast_twin) on all paths,
-    including adversarial lines where the tab-count guard must fall back."""
+    """Same sweep over a CloudFront corpus — exercises the tab-separated
+    twin decode (patterns.fast_twin) on both engines, including
+    adversarial lines where the tab-count guard must fall back."""
     from tests.test_fast_twin import ADVERSARIAL, _cf_line
 
     rng = random.Random(7)
@@ -89,6 +85,3 @@ def test_randomized_equivalence_cloudfront(spark):
         )
         base = rows(parse_routed(lines, "cloudfront", opt))
         assert rows(fast_parse_routed(lines, "cloudfront", opt)) == base, (trial, opt)
-        assert rows(
-            fast_parse_routed(lines, "cloudfront", opt, decoder="jvm")
-        ) == base, (trial, opt)

@@ -1,6 +1,6 @@
 """Fast-path (JVM serialization) vs compat-path equivalence: both engines
-must produce identical routed rows for every supported Option combination
-on the golden corpus."""
+share one decoder and must produce identical routed rows for every
+supported Option combination on the golden corpus."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,27 +42,17 @@ def test_fast_matches_compat_golden(spark, opt):
     )
 
 
-@pytest.mark.parametrize("opt", OPTIONS[:7], ids=[str(i) for i in range(7)])
-def test_jvm_decoder_matches_compat(spark, opt):
-    lines = lines_from_string(spark, g.CONTAINS_UNMATCH_INPUT)
-    assert collect(fast_parse_routed(lines, "s3", opt, decoder="jvm")) == collect(
-        parse_routed(lines, "s3", opt)
-    )
-
-
-def test_jvm_decoder_fallback_patterns(spark):
-    # fallback pattern ids survive the zero-Python plan
-    from access_log_parser_spark.functions.jvm_decode import extract_fields_jvm
+def test_fallback_pattern_ids_match_compat(spark):
+    # fallback pattern ids from the Arrow stage equal the compat engine's
     from access_log_parser_spark.engine import extract_fields
 
-    pages = synth_pages(spark, 20, 10, 5)
-    lines = pages_to_lines(pages)
+    lines = pages_to_lines(synth_pages(spark, 20, 10, 5))
     a = extract_fields(lines, "s3", passthrough=["source", "line_no"])
-    b = extract_fields_jvm(lines, "s3", passthrough=["source", "line_no"])
-    key = lambda r: (r["source"], r["line_no"])
-    ra = sorted(map(tuple, a.collect()), key=lambda t: (t[0], t[1]))
-    rb = sorted(map(tuple, b.collect()), key=lambda t: (t[0], t[1]))
+    b = parse_routed(lines, "s3", Option())
+    ra = sorted(map(tuple, a.select("source", "line_no", "pattern_id").collect()))
+    rb = sorted(map(tuple, b.select("source", "line_no", "pattern_id").collect()))
     assert ra == rb
+    assert {t[2] for t in ra} == {-1, 1, 2, 3, 4}
 
 
 def test_fast_matches_compat_synth_corpus(spark):
@@ -91,19 +81,21 @@ def test_pipeline_auto_uses_fast(spark, tmp_path):
     assert read_sink(spark, str(tmp_path / "o")).count() == 200
 
 
-def test_jvm_cloudfront_twin_equivalence_adversarial(spark):
-    """JVM decoder's guarded tab-twin must agree with the Python decoder
-    on adversarial CloudFront lines (extra/missing tabs, quotes, spaces)."""
+def test_cloudfront_adversarial_extract_matches_plain_re2(spark):
+    """The Arrow stage's guarded tab-twin must agree with the original
+    pattern on adversarial CloudFront lines (extra/missing tabs, quotes,
+    spaces)."""
     from access_log_parser_spark import extract_fields
-    from access_log_parser_spark.functions.jvm_decode import extract_fields_jvm
-    from tests.test_fast_twin import ADVERSARIAL
+    from access_log_parser_spark.patterns import CLOUDFRONT
+    from tests.test_fast_twin import ADVERSARIAL, plain_re2
 
     lines = spark.createDataFrame(
         [(str(i), i + 1, s) for i, s in enumerate(ADVERSARIAL)],
         ["source", "line_no", "raw"],
     )
-    py = extract_fields(lines, "cloudfront", passthrough=["source"])
-    jvm = extract_fields_jvm(lines, "cloudfront", passthrough=["source"])
-    a = sorted(map(tuple, py.collect()))
-    b = sorted(map(tuple, jvm.collect()))
-    assert a == b
+    got = {
+        r["source"]: (r["pattern_id"], list(r)[2:])
+        for r in extract_fields(lines, "cloudfront", passthrough=["source"]).collect()
+    }
+    for i, want in enumerate(plain_re2(CLOUDFRONT[0], ADVERSARIAL)):
+        assert got[str(i)] == ((-1, [None] * 33) if want is None else (0, want))

@@ -13,11 +13,12 @@ table-driven goldens.
 import json
 import re
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from access_log_parser_spark import patterns as pat
-from access_log_parser_spark.decoders import ltsv_decode_batch, regex_decode_batch
+from access_log_parser_spark.decoders import ltsv_decode_batch, regex_decode
 from access_log_parser_spark.handlers import (
     json_line_handler,
     ltsv_line_handler,
@@ -67,13 +68,14 @@ def test_ltsv_handler_round_trips_through_decoder(pairs):
 @given(st.text(max_size=200))
 @settings(max_examples=300, deadline=None)
 def test_regex_decode_total(line):
-    compiled = [pat.validate_pattern(p) for p in pat.PRESETS["s3"]]
-    names = [pat.group_names(p) for p in compiled]
-    pids, vals = regex_decode_batch([line], compiled, names)
-    if pids[0] >= 0:
-        assert len(vals[0]) == compiled[pids[0]].groups
+    names = [pat.validate_pattern(p) for p in pat.PRESETS["s3"]]
+    row = regex_decode(pa.array([line]), pat.PRESETS["s3"]).to_pylist()[0]
+    pid = row.pop("pattern_id")
+    present = {k for k, v in row.items() if v is not None}
+    if pid >= 0:
+        assert present == set(names[pid])
     else:
-        assert vals[0] is None
+        assert present == set()
 
 
 @given(st.lists(st.text(alphabet=st.characters(blacklist_characters="\t\n\r",

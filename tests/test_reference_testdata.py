@@ -4,15 +4,19 @@ all_unmatch} x{s3, ltsv}" — parser_core_test.go:704-1356): every file
 parsed through the matching engine path with the reference's expected
 counter tuples, plus serialized-output equality between the plain, gzip
 and zip variants of the same scenario (same bytes through any transport).
+The corpus under tests/fixtures/ is a reconstruction built from the
+transliterated goldens (tests/fixtures/build.py).
 """
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import pytest
 
 from access_log_parser_spark import LTSVParser, new_s3_parser
 
-REF = "/root/reference/testdata"
+REF = str(Path(__file__).resolve().parent / "fixtures")
 
 # scenario -> (total, matched, unmatched, excluded, skipped)
 EXPECTED = {
